@@ -30,6 +30,7 @@ from linkgraph.plans.iterate import (
     LineageChain,
     PeelCheckpoint,
     iterate,
+    truncate_lineage,
 )
 
 
@@ -172,7 +173,9 @@ def weakly_connected_components(
         prev = init_labels.select(
             "id", F.col("component").cast("long").alias("_warm")
         )
-        init = (
+        # cut once: a warm start that converges before the first
+        # truncate boundary would otherwise nest the seed's whole plan
+        init = truncate_lineage(
             init.join(prev, "id", "left")
             .select("id", F.coalesce("_warm", F.col("label")).alias("label"))
         )

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from linkgraph.functions.text import md5int_col
 from linkgraph.graph import LinkGraph
 from linkgraph.plans.iterate import LineageChain
-from linkgraph.plans.partitioning import broadcast_state_rows, shuffle_width
+from linkgraph.plans.partitioning import spmv_plan, transition_operand
 
 
 def opic(
@@ -48,19 +48,14 @@ def opic(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 0,
     resume: bool = True,
-    state_broadcast: bool | str = "auto",
 ) -> DataFrame:
     """DataFrame(id, cash, history, priority) after ``rounds``
     synchronous OPIC rounds.
 
-    ``state_broadcast``: PageRank's exchange-free broadcast-SpMV plan
-    applied to the cash gather — the transition operand is keyed by
-    DST, the V-row cash frame broadcasts into the join, and both the
-    join and the per-dst cash sum run with no Exchange. "auto"
-    mirrors AQE's broadcast judgment via
-    plans/partitioning.broadcast_state_rows (V·16B vs
-    autoBroadcastJoinThreshold); False keeps the shuffle plan
-    (src-keyed operand, co-partitioned join).
+    The cash gather runs pagerank's SpMV plan on pagerank's memoized
+    transition operand (plans/partitioning.transition_operand), so
+    the two operators share one build per graph; the broadcast-or-
+    shuffle choice follows ``spark.sql.autoBroadcastJoinThreshold``.
 
     Invariants (tested): Σ cash = 1 after every round, Σ history =
     rounds, so Σ priority = 1 — the estimate is a distribution at
@@ -87,37 +82,12 @@ def opic(
             [], "id long, cash double, history double, priority double"
         )
     m = graph.operand(("count", "sym_edges"), edges.count)
-    n_parts = max(1, min(shuffle_width(spark), (m + 1_999_999) // 2_000_000))
-    if state_broadcast == "auto":
-        state_broadcast = n <= broadcast_state_rows(spark)
+    plan = spmv_plan(spark, n, m)
 
     w = _weight_col(weighted, weight_expr)
     out_sums = edges.groupBy("src").agg(F.sum(w).alias("out_w"))
-    # the stationary operand: P(u→v), hash-partitioned once — by src
-    # (shuffle plan: the per-round cash⋈trans join co-partitions,
-    # only the V-row cash frame moves) or by dst (broadcast plan:
-    # cash broadcasts into the join and the per-dst sum inherits the
-    # operand's partitioning — zero Exchange per round). Memoized on
-    # the graph object like pagerank's (pure function of the graph
-    # unless a call-local weight expression is given).
-    trans_key = "dst" if state_broadcast else "src"
-
-    def _build_trans():
-        t = (
-            edges.join(out_sums, "src")
-            .select("src", "dst", (w / F.col("out_w")).alias("p"))
-            .repartition(n_parts, trans_key)
-            .persist()
-        )
-        t.count()
-        return t
-
     trans_memo = weight_expr is None
-    trans = (
-        graph.operand(("pr_trans", bool(weighted), trans_key, n_parts), _build_trans)
-        if trans_memo
-        else _build_trans()
-    )
+    trans = transition_operand(graph, plan, w, out_sums, weighted, memo=trans_memo)
 
     def _build_verts():
         dangling_ids = vertices.join(
@@ -127,13 +97,13 @@ def opic(
             vertices.join(dangling_ids, "id", "left_anti")
             .withColumn("dangling", F.lit(False))
             .unionByName(dangling_ids.withColumn("dangling", F.lit(True)))
-            .repartition(n_parts, "id")
+            .repartition(plan.n_parts, "id")
             .persist()
         )
         v.count()
         return v
 
-    verts = graph.operand(("opic_verts", n_parts), _build_verts)
+    verts = graph.operand(("opic_verts", plan.n_parts), _build_verts)
 
     from linkgraph.plans.iterate import PeelCheckpoint
 
@@ -164,9 +134,7 @@ def opic(
         dm = state.filter("dangling").agg(
             F.coalesce(F.sum("cash"), F.lit(0.0)).alias("dm")
         )
-        cash = state.select("id", "cash")
-        if state_broadcast:
-            cash = F.broadcast(cash)
+        cash = plan.state(state.select("id", "cash"))
         recv = (
             cash.join(trans, cash["id"] == trans["src"])
             .groupBy("dst")

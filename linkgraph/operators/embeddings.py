@@ -41,23 +41,25 @@ gradient descent:
     bounded regardless of degree skew — the same reason distributed
     word2vec implementations average per-word deltas.
 
-Per-iteration plan shape (model_broadcast=True, the V <= ~2·10^5
-regime): the V-row model frame (2V rows: side 0 = input vectors,
-side 1 = output vectors) broadcasts into the example join, the two
-gradient families leave the join as ONE inline_outer explode (each
-scored example emits its v-gradient and u-gradient contribution rows
-in the same pass — the scored join is never computed twice), and the
-single shuffle of the iteration is the (side, id)-keyed gradient avg,
-map-side combined from 2·E·(1+k) rows down to ≤ 2V per partition.
-The updated model rides ONE LineageChain cut (one action, one tiny
-parquet) per iteration. With model_broadcast=False (10^9-vertex
-regime) the same plan runs with hash joins: the example cache is
-partitioned by c so the center join co-locates (the input-vector
-frame shuffles, V rows), and the context join then re-keys the
-scored examples by target — ONE E-sized exchange per iteration, the
-unavoidable cost of meeting the second factor of a factorized model
-without a broadcast; the gradient aggregation stays map-side
-combined on top of it.
+Per-iteration plan shape: the broadcast-or-shuffle choice is
+plans/partitioning.spmv_plan's, so it follows
+``spark.sql.autoBroadcastJoinThreshold`` with the model's true row
+size (2V rows of one id + ``dim`` doubles). Broadcast: the model
+frame (side 0 = input vectors, side 1 = output vectors) broadcasts
+into the example join, the two gradient families leave the join as
+ONE inline_outer explode (each scored example emits its v-gradient
+and u-gradient contribution rows in the same pass — the scored join
+is never computed twice), and the single shuffle of the iteration is
+the (side, id)-keyed gradient avg, map-side combined from 2·E·(1+k)
+rows down to ≤ 2V per partition. The updated model rides ONE
+LineageChain cut (one action, one tiny parquet) per iteration.
+Shuffle (a model over the threshold, e.g. 10^9 vertices): the same
+plan runs with hash joins: the example cache is partitioned by c so
+the center join co-locates (the input-vector frame shuffles, V
+rows), and the context join then re-keys the scored examples by
+target — ONE E-sized exchange per iteration, the unavoidable cost of
+meeting the second factor of a factorized model without a broadcast;
+the gradient aggregation stays map-side combined on top of it.
 
 Determinism / engine portability: init values and negatives come from
 the portable md5-60-bit hash (`functions/text.md5int_col`), every
@@ -75,15 +77,11 @@ from pyspark.sql import functions as F
 from linkgraph.functions.text import md5int_col
 from linkgraph.graph import LinkGraph
 from linkgraph.plans.iterate import LineageChain, PeelCheckpoint
+from linkgraph.plans.partitioning import spmv_plan
 
 # modulus for the uniform init hash — prime, and small enough that
 # (h % MOD) / MOD is exact in float64 in any engine
 INIT_MOD = 1_000_003
-
-# auto model_broadcast cutoff: 2 tables x 200k vectors x 16 dims x 8B
-# ~= 50 MB of broadcast per executor — comfortably under Spark's
-# default broadcast ceiling; above it the shuffle-join path wins
-BROADCAST_MAX_VOCAB = 200_000
 
 
 def vocab_index(ids: DataFrame) -> DataFrame:
@@ -255,7 +253,6 @@ def skipgram_train(
     lr: float = 0.5,
     k_neg: int = 2,
     seed: int = 42,
-    model_broadcast: bool | None = None,
     partitions: int | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 0,
@@ -266,8 +263,8 @@ def skipgram_train(
     ``iters`` deterministic full-batch steps (see module docstring
     for the objective, plan shape and determinism contract).
 
-    ``model_broadcast``: None (default) auto-selects broadcast model
-    joins when |vocab| <= 200k, hash joins above.
+    The model joins are broadcast joins while the 2·|vocab|-row model
+    fits ``spark.sql.autoBroadcastJoinThreshold``, hash joins above.
     ``checkpoint_dir``/``checkpoint_every``: durable per-step commits
     of both model tables via PeelCheckpoint; a restarted call with
     the same dir resumes GD mid-training, and a checkpoint trained
@@ -289,15 +286,14 @@ def skipgram_train(
     n_vocab = vocab.count()
     if n_vocab == 0:
         raise ValueError("pairs is empty — nothing to train")
-    if model_broadcast is None:
-        model_broadcast = n_vocab <= BROADCAST_MAX_VOCAB
-
     ex = (
         skipgram_examples(p, vocab, n_vocab, k_neg, seed)
         .repartition(n_part, "c")
         .persist()
     )
-    ex.count()  # materialize the static example cache once
+    # materialize the static example cache once; the model frame is
+    # 2·|vocab| rows of (id, dim doubles)
+    plan = spmv_plan(spark, 2 * n_vocab, ex.count(), row_bytes=8 + 8 * dim)
 
     ckpt = PeelCheckpoint(checkpoint_dir, spark) if checkpoint_dir else None
     meta = ckpt.latest() if (ckpt and resume) else None
@@ -333,8 +329,7 @@ def skipgram_train(
         uside = state.filter(F.col("side") == 1).select(
             F.col("id").alias("t"), F.col("vec").alias("_u")
         )
-        if model_broadcast:
-            vside, uside = F.broadcast(vside), F.broadcast(uside)
+        vside, uside = plan.state(vside), plan.state(uside)
         scored = (
             ex.join(vside, "c")
             .join(uside, "t")

@@ -166,8 +166,8 @@ def label_spreading(
     outer merge against the carried seed column. Directed graphs
     diffuse over the weak (symmetrized) structure, like LPA.
 
-    No ``state_broadcast`` plan here, deliberately: unlike the dense
-    V-row SpMV states (pagerank/HITS/Katz/OPIC), this state is the
+    No broadcast plan here (plans/partitioning.spmv_plan),
+    deliberately: unlike the dense V-row SpMV states (pagerank/HITS/Katz/OPIC), this state is the
     SPARSE (id, label, score) frontier — its size is
     diffusion-dependent and can approach V·C rows, so a per-round
     broadcast has no safe size bound to auto-switch on; the

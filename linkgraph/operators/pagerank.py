@@ -22,11 +22,12 @@ Physical plan per iteration (the 100 TB shape):
 - the convergence delta rides the rank update itself (old rank is a
   carried column) — ONE agg action per iteration, no second join.
 - dangling mass is an in-plan 1-row broadcast, no collect.
-- hub skew on the dst-sum: map-side partial aggregation covers the
-  sum itself; ``salt_contribs`` adds an explicit two-level salted
-  aggregation (plans/skew.salted_sum) for plans where partial agg
-  degrades — "auto" turns it on when the max in-degree dominates
-  the mean by 64x (degree-stats-driven switch, north-rule skew item).
+- broadcast or shuffle: plans/partitioning.spmv_plan picks the plan
+  from ``spark.sql.autoBroadcastJoinThreshold``; under broadcast the
+  operand is keyed by dst and the V-row rank frame ships into the
+  join, so no stage of the iteration exchanges.
+- hub skew on the dst-sum: map-side partial aggregation bounds each
+  reducer's input at V·P rows whatever the hub in-degree.
 """
 
 from __future__ import annotations
@@ -36,8 +37,7 @@ from pyspark.sql import functions as F
 
 from linkgraph.graph import LinkGraph
 from linkgraph.plans.iterate import IterationResult, iterate, truncate_lineage
-from linkgraph.plans.partitioning import broadcast_state_rows, shuffle_width
-from linkgraph.plans.skew import salted_sum
+from linkgraph.plans.partitioning import spmv_plan, transition_operand
 
 
 def _weight_col(weighted: bool, weight_expr: Column | str | None) -> Column:
@@ -63,11 +63,7 @@ def pagerank(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 0,
     truncate_every: int = 3,
-    salt_contribs: int | str = 0,
     on_exhaustion: str = "raise",
-    rank_broadcast: bool | str = "auto",
-    rank_broadcast_max: int = 50_000_000,
-    rank_broadcast_auto_max: int | None = None,
 ) -> IterationResult:
     """Returns IterationResult whose state is DataFrame(id, rank).
 
@@ -91,35 +87,14 @@ def pagerank(
     is start-independent — warm and cold runs agree to solver
     tolerance.
 
-    ``salt_contribs``: 0 = plain groupBy (map-side combine handles
-    hubs); int n = explicit n-salt two-level aggregation; "auto" =
-    decide from the in-degree distribution.
-
-    ``rank_broadcast``: the V≪E broadcast-SpMV plan (the north
-    star's "broadcast-aware shuffle join"). The transition table is
-    cached hash-partitioned by DST and the V-row rank frame is
-    BROADCAST into the join each iteration: the ranks⋈edges join,
-    the contribution sum (already dst-partitioned) and the rank
-    update all run exchange-free — per-iteration shuffle bytes drop
-    from O(E) to ZERO, at the cost of shipping V rows to every
-    executor per iteration. Right when V·16B ≪ E·16B/executors
-    (e.g. 10^7 vertices vs 10^8.5 edges); WRONG at 10^10+ vertices,
-    so forcing it on is guarded by ``rank_broadcast_max`` (raises
-    rather than silently OOMing the driver). The default ``"auto"``
-    takes the broadcast plan when the estimated rank-frame size
-    (V × 16 B) fits ``spark.sql.autoBroadcastJoinThreshold`` —
-    literally the same judgment, and the same already-tuned knob, as
-    Spark's own AQE broadcast conversion
-    (plans/partitioning.broadcast_state_rows). With the engine
+    The broadcast-or-shuffle plan follows
+    ``spark.sql.autoBroadcastJoinThreshold``
+    (plans/partitioning.spmv_plan): the V-row rank frame broadcasts
+    into each iteration when V × 16 B fits it. With the engine
     session's 64 MB that is ~4M vertices — the regime where the
-    broadcast plan measured 3.1x over shuffle SpMV at 160M Zipf
-    edges on local[32] (BENCH/BASELINE.md Job 4) — while Spark's
-    stock 10 MB keeps untuned many-executor clusters conservative
-    (per-round broadcast bytes scale with executor count; the
-    crossover is topology-dependent, and on process-isolated
-    executors broadcast measured a loss). Pass an int
-    ``rank_broadcast_auto_max`` to pin the auto threshold
-    explicitly.
+    broadcast plan measured 3.1x over shuffle SpMV at 160M Zipf edges
+    on local[32] (BENCH/BASELINE.md Job 4). Set the threshold to -1
+    for the shuffle plan.
 
     Repeat calls on the SAME graph object reuse the stationary
     transition/vertex operands via ``LinkGraph.operand`` (keyed by
@@ -133,77 +108,15 @@ def pagerank(
     n = graph.operand(("count", "vertices"), vertices.count)
     if n == 0:
         return IterationResult(state=spark.createDataFrame([], "id long, rank double"))
-    # Partition the stationary transition table by DATA, capped at the
-    # session's shuffle width: ~2M edge rows (~50 MB) per partition.
-    # A fixed wide layout costs real scheduler floor per iteration on
-    # small graphs (64 near-empty tasks × k iterations) while big
-    # graphs hit the cap and behave like the shuffle setting.
     m = graph.operand(("count", "sym_edges"), edges.count)
-    n_parts = max(1, min(
-        shuffle_width(spark),
-        (m + 1_999_999) // 2_000_000,
-    ))
+    plan = spmv_plan(spark, n, m)
 
     w = _weight_col(weighted, weight_expr)
     out_sums = edges.groupBy("src").agg(F.sum(w).alias("out_w"))
-    # Normalized transition edges: weight column becomes P(u→v).
-    # Built once — the invariant operand of every iteration. The
-    # parquet roundtrip UNDER the cache matters: persisting a frame
-    # whose lineage contains AQE shuffles is fragile on long runs
-    # (an evicted/lazily-missing cache partition recomputes through
-    # shuffle files the cleaner may have already removed —
-    # "shuffle_N.data does not exist"). With the roundtrip, any
-    # recompute path is a durable parquet scan. The explicit
-    # repartition(src) gives the cache HashPartitioning(src, P): the
-    # per-iteration ranks⋈trans join then co-partitions and the edge
-    # table NEVER re-shuffles — only the (small) rank frame moves.
-    if rank_broadcast == "auto":
-        auto_max = (
-            rank_broadcast_auto_max
-            if rank_broadcast_auto_max is not None
-            else broadcast_state_rows(spark)
-        )
-        rank_broadcast = n <= auto_max
-    if rank_broadcast and n > rank_broadcast_max:
-        raise ValueError(
-            f"rank_broadcast requires collecting the {n}-row vertex frame to "
-            f"the driver each iteration (> rank_broadcast_max={rank_broadcast_max}); "
-            "use the default shuffle plan at this vertex count"
-        )
-    # Broadcast plan partitions the stationary operand by DST so the
-    # contribution sum needs no exchange; shuffle plan partitions by
-    # SRC so the per-iteration ranks⋈trans join co-partitions.
-    trans_key = "dst" if rank_broadcast else "src"
-
-    def _build_trans() -> DataFrame:
-        return (
-            truncate_lineage(
-                edges.join(out_sums, "src")
-                .select("src", "dst", (w / F.col("out_w")).alias("p"))
-            )
-            .repartition(n_parts, trans_key)
-            .persist()
-        )
-
-    # memoize the stationary operand on the graph object when it is a
-    # pure function of the graph (a weight EXPRESSION is call-local —
-    # Columns aren't stable cache keys); caller-specific operands are
-    # built fresh and unpersisted on exit as before
+    # the invariant operand of every iteration, memoized on the graph
+    # unless a weight EXPRESSION makes it call-local
     trans_memo = weight_expr is None
-    trans = (
-        graph.operand(("pr_trans", bool(weighted), trans_key, n_parts), _build_trans)
-        if trans_memo
-        else _build_trans()
-    )
-
-    if salt_contribs == "auto":
-        # degree-stats-driven switch: explicit salting only when one
-        # hub's in-degree dwarfs the mean (otherwise map-side combine
-        # already bounds the per-reducer row count at V·P).
-        stats = trans.groupBy("dst").agg(F.count("*").alias("d")).agg(
-            F.max("d").alias("mx"), F.avg("d").alias("av")
-        ).collect()[0]
-        salt_contribs = 16 if (stats["mx"] or 0) > 64 * max(stats["av"] or 1.0, 1.0) else 0
+    trans = transition_operand(graph, plan, w, out_sums, weighted, memo=trans_memo)
 
     # Vertex table with dangling flag (out-degree 0) and teleport
     # probability column, cached once. The uniform-teleport variant is
@@ -234,12 +147,12 @@ def pagerank(
         ).drop("p")
 
     def _build_verts(vframe: DataFrame = verts) -> DataFrame:
-        out = truncate_lineage(vframe).repartition(n_parts, "id").persist()
+        out = truncate_lineage(vframe).repartition(plan.n_parts, "id").persist()
         out.count()
         return out
 
     verts = (
-        graph.operand(("pr_verts", n_parts), _build_verts)
+        graph.operand(("pr_verts", plan.n_parts), _build_verts)
         if verts_memo
         else _build_verts()
     )
@@ -249,8 +162,13 @@ def pagerank(
         init = verts.select("id", F.lit(1.0 / n).alias("rank"), "dangling", "tp")
     else:
         ir = init_ranks.select("id", F.col("rank").cast("double").alias("r0"))
-        seeded = verts.join(ir, "id", "left").withColumn(
-            "r0", F.coalesce("r0", F.lit(1.0 / n))
+        # cut once: a warm start that converges before the first
+        # truncate_every boundary would otherwise return a state whose
+        # plan nests the seed's (previous result's) whole plan
+        seeded = truncate_lineage(
+            verts.join(ir, "id", "left").withColumn(
+                "r0", F.coalesce("r0", F.lit(1.0 / n))
+            )
         )
         s0 = seeded.agg(F.sum("r0")).collect()[0][0]
         if s0 is None or not (float(s0) > 0.0) or s0 != s0 or s0 == float("inf"):
@@ -268,18 +186,13 @@ def pagerank(
         dangling = state.filter("dangling").agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
         )
-        ranks = state.select("id", "rank")
-        if rank_broadcast:
-            # broadcast-hash join against the dst-partitioned operand:
-            # no exchange for the join, none for the dst sum below
-            ranks = F.broadcast(ranks)
-        pre = ranks.join(trans, ranks.id == trans.src).select(
-            F.col("dst").alias("id"), (F.col("rank") * F.col("p")).alias("c")
+        ranks = plan.state(state.select("id", "rank"))
+        contribs = (
+            ranks.join(trans, ranks.id == trans.src)
+            .select(F.col("dst").alias("id"), (F.col("rank") * F.col("p")).alias("c"))
+            .groupBy("id")
+            .agg(F.sum("c").alias("csum"))
         )
-        if salt_contribs:
-            contribs = salted_sum(pre, "id", "c", "csum", n_salts=int(salt_contribs))
-        else:
-            contribs = pre.groupBy("id").agg(F.sum("c").alias("csum"))
         # old rank rides along as a column: delta needs no second join
         new = (
             state.select("id", F.col("rank").alias("_old"), "dangling", "tp")
@@ -363,9 +276,9 @@ def trustrank(
     ignored). Must be non-empty — an empty seed frame has no valid
     teleport distribution and raises (loud-failure policy).
 
-    Inherits every ``pagerank`` scale lever (stationary cached
-    transition table, broadcast-SpMV plan, salting switch) via
-    ``**kwargs``.
+    Every other ``pagerank`` argument passes through ``**kwargs``;
+    the broadcast-or-shuffle plan follows
+    ``spark.sql.autoBroadcastJoinThreshold`` as in ``pagerank``.
     """
     p = seeds.select(F.col("id"), F.lit(1.0).alias("p")).distinct()
     if p.limit(1).count() == 0:
@@ -478,9 +391,9 @@ def blockrank(
     block's rank uniformly over its pages (the paper's "local
     PageRank" refined here to the uniform intra-block start — the
     block mass placement is what drives the speedup) and runs the
-    page-level ``pagerank`` from it. Every page-level scale lever
-    (stationary transition cache, broadcast-SpMV, salting) passes
-    through ``**kwargs``; the returned IterationResult's stats are
+    page-level ``pagerank`` from it. Every other page-level
+    ``pagerank`` argument passes through ``**kwargs`` (the SpMV plan
+    follows ``spark.sql.autoBroadcastJoinThreshold``); the returned IterationResult's stats are
     the page-level iterations only, so the saving is measurable
     (tests/test_pagerank.py asserts warm <= cold and value equality).
     """

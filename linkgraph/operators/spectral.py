@@ -15,6 +15,12 @@ Physical plan per iteration (the 100 TB shape, mirroring pagerank.py):
   by src, authority→hub keyed by dst), so TWO stationary copies are
   cached, each hash-partitioned on the key its join probes — neither
   copy ever re-shuffles; only the V-row score frame moves.
+- the broadcast-or-shuffle plan of each push comes from
+  plans/partitioning.spmv_plan and follows
+  ``spark.sql.autoBroadcastJoinThreshold``: when the V-row score frame
+  fits it, the frame broadcasts into the join and the operand is read
+  keyed by the push's OUTPUT key, so the sum and the state merge run
+  with no Exchange.
 - per-iteration normalization constants (L1 for HITS, L2 for
   eigenvector) ride as in-plan 1-row broadcasts — no collect.
 - the convergence delta is carried as a column on the state (one agg
@@ -30,7 +36,7 @@ from pyspark.sql import functions as F
 from linkgraph.graph import LinkGraph
 from linkgraph.operators.pagerank import _weight_col
 from linkgraph.plans.iterate import IterationResult, iterate, truncate_lineage
-from linkgraph.plans.partitioning import broadcast_state_rows, stationary
+from linkgraph.plans.partitioning import spmv_plan, stationary
 
 
 def hits(
@@ -43,7 +49,6 @@ def hits(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 0,
     on_exhaustion: str = "raise",
-    state_broadcast: bool | str = "auto",
 ) -> IterationResult:
     """Kleinberg HITS: IterationResult whose state is
     DataFrame(id, hub, authority), both L1-normalized (sum 1).
@@ -63,14 +68,9 @@ def hits(
     NetworkX). Vertices with no out-edges get hub 0; no in-edges,
     authority 0. Weights must be non-negative.
 
-    ``state_broadcast`` ("auto", pagerank's rank_broadcast contract):
-    when the V-row state fits the session's
-    autoBroadcastJoinThreshold, each push broadcasts the score frame
-    and probes the stationary copy keyed by its OUTPUT key (the
-    hub→authority push reads the dst-keyed copy, the authority→hub
-    push the src-keyed copy) so both per-vertex sums and the state
-    merge run with no Exchange; the vertex table itself is a third
-    id-keyed stationary operand in both plans.
+    Both pushes probe the stationary edge copy their plan keys them
+    on (module docstring); the vertex table is a third id-keyed
+    stationary operand in both plans.
     """
     spark = graph.edges.sparkSession
     vertices = graph.vertices.select("id")
@@ -88,13 +88,12 @@ def hits(
                 "id", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority")
             )
         )
-    if state_broadcast == "auto":
-        state_broadcast = n <= broadcast_state_rows(spark, row_bytes=24)
+    plan = spmv_plan(spark, n, m, row_bytes=24)
     # two stationary copies, each partitioned on the key its join
     # probes (shuffle plan) / produces (broadcast plan); the vertex
     # table id-keyed so the per-iteration auth merge never exchanges
-    e_by_src = stationary(e, "src", rows=m)
-    e_by_dst = stationary(e, "dst", rows=m)
+    e_by = {k: stationary(e, k, rows=m) for k in ("src", "dst")}
+    a_op, h_op = e_by[plan.operand_key("dst")], e_by[plan.operand_key("src")]
     v_st = stationary(vertices, "id", rows=n)
 
     init = truncate_lineage(
@@ -105,10 +104,7 @@ def hits(
     fixed_iters = tol < 0
 
     def step(state: DataFrame, i: int) -> tuple[DataFrame, float]:
-        hubs = state.select("id", "hub")
-        a_op = e_by_dst if state_broadcast else e_by_src
-        if state_broadcast:
-            hubs = F.broadcast(hubs)
+        hubs = plan.state(state.select("id", "hub"))
         a_raw = (
             hubs.join(a_op, hubs.id == a_op.src)
             .select(F.col("dst").alias("id"), (F.col("hub") * F.col("w")).alias("c"))
@@ -124,8 +120,7 @@ def hits(
                 (F.coalesce("a_raw", F.lit(0.0)) / F.col("asum")).alias("authority"),
             )
         )
-        h_op = e_by_src if state_broadcast else e_by_dst
-        auth_in = F.broadcast(auth) if state_broadcast else auth
+        auth_in = plan.state(auth)
         h_raw = (
             auth_in.join(h_op, auth_in.id == h_op.dst)
             .select(
@@ -168,8 +163,8 @@ def hits(
         on_exhaustion="ok" if fixed_iters else on_exhaustion,
     )
     res.state = res.state.select("id", "hub", "authority")
-    e_by_src.unpersist()
-    e_by_dst.unpersist()
+    for op in e_by.values():
+        op.unpersist()
     v_st.unpersist()
     return res
 
@@ -192,7 +187,6 @@ def eigenvector_centrality(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 0,
     on_exhaustion: str = "raise",
-    state_broadcast: bool | str = "auto",
 ) -> IterationResult:
     """Eigenvector centrality: IterationResult whose state is
     DataFrame(id, centrality), L2-normalized.
@@ -203,9 +197,8 @@ def eigenvector_centrality(
     L2-normalize, stop when Σ|x'-x| < n·tol, raise on exhaustion
     (NetworkX's PowerIterationFailedConvergence). Directed graphs use
     in-edges ("left" eigenvector centrality, the NetworkX contract);
-    undirected graphs symmetrize. ``state_broadcast`` follows
-    pagerank's contract (auto exchange-free plan when the score frame
-    fits autoBroadcastJoinThreshold).
+    undirected graphs symmetrize. The SpMV plan follows
+    ``spark.sql.autoBroadcastJoinThreshold`` (module docstring).
     """
     spark = graph.edges.sparkSession
     vertices = graph.vertices.select("id")
@@ -214,11 +207,11 @@ def eigenvector_centrality(
         return IterationResult(
             state=spark.createDataFrame([], "id long, centrality double")
         )
-    if state_broadcast == "auto":
-        state_broadcast = n <= broadcast_state_rows(spark)
     w = _weight_col(weighted, weight_expr)
     e = graph.sym_edges.select("src", "dst", w.alias("w"))
-    e_op = stationary(e, "dst" if state_broadcast else "src")
+    m = e.count()
+    plan = spmv_plan(spark, n, m)
+    e_op = stationary(e, plan.operand_key(), rows=m)
 
     init = truncate_lineage(
         vertices.select("id", (F.lit(1.0) / F.sqrt(F.lit(float(n)))).alias("x"))
@@ -226,9 +219,7 @@ def eigenvector_centrality(
     fixed_iters = tol < 0
 
     def step(state: DataFrame, i: int) -> tuple[DataFrame, float]:
-        xs = state.select("id", "x")
-        if state_broadcast:
-            xs = F.broadcast(xs)
+        xs = plan.state(state.select("id", "x"))
         raw = (
             xs.join(e_op, xs.id == e_op.src)
             .select(F.col("dst").alias("id"), (F.col("x") * F.col("w")).alias("c"))
@@ -290,7 +281,6 @@ def katz_centrality(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 0,
     on_exhaustion: str = "raise",
-    state_broadcast: bool | str = "auto",
 ) -> IterationResult:
     """Katz centrality: IterationResult whose state is
     DataFrame(id, centrality), L2-normalized at the end.
@@ -306,12 +296,9 @@ def katz_centrality(
     Physical plan per iteration is the PageRank SpMV shape: the edge
     operand is cached hash-partitioned and never re-shuffles; only
     the V-row score frame moves, and the final normalization constant
-    rides as a 1-row in-plan broadcast. ``state_broadcast`` follows
-    pagerank's ``rank_broadcast``: "auto" takes the exchange-free
-    broadcast plan (operand keyed by DST, the V-row score frame
-    broadcast into the join, per-dst sum exchange-free) when the
-    state fits the session's autoBroadcastJoinThreshold
-    (plans/partitioning.broadcast_state_rows).
+    rides as a 1-row in-plan broadcast. The broadcast-or-shuffle
+    plan follows ``spark.sql.autoBroadcastJoinThreshold`` (module
+    docstring).
     """
     spark = graph.edges.sparkSession
     vertices = graph.vertices.select("id")
@@ -320,19 +307,17 @@ def katz_centrality(
         return IterationResult(
             state=spark.createDataFrame([], "id long, centrality double")
         )
-    if state_broadcast == "auto":
-        state_broadcast = n <= broadcast_state_rows(spark)
     w = _weight_col(weighted, weight_expr)
     e = graph.sym_edges.select("src", "dst", w.alias("w"))
-    e_op = stationary(e, "dst" if state_broadcast else "src")
+    m = e.count()
+    plan = spmv_plan(spark, n, m)
+    e_op = stationary(e, plan.operand_key(), rows=m)
 
     init = truncate_lineage(vertices.select("id", F.lit(0.0).alias("x")))
     fixed_iters = tol < 0
 
     def step(state: DataFrame, i: int) -> tuple[DataFrame, float]:
-        xs = state.select("id", "x")
-        if state_broadcast:
-            xs = F.broadcast(xs)
+        xs = plan.state(state.select("id", "x"))
         raw = (
             xs.join(e_op, xs.id == e_op.src)
             .select(F.col("dst").alias("id"), (F.col("x") * F.col("w")).alias("c"))
@@ -393,7 +378,6 @@ def salsa(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 0,
     on_exhaustion: str = "raise",
-    state_broadcast: bool | str = "auto",
 ) -> IterationResult:
     """SALSA (Lempel & Moran): IterationResult whose state is
     DataFrame(id, hub, authority), both L1-normalized.
@@ -408,8 +392,7 @@ def salsa(
     exhaustion behavior, zero-degree conventions and the physical
     plan (two stationary degree-annotated edge copies, each hash-
     partitioned on its join key; 1-row normalizer broadcasts; delta
-    carried on the state) all mirror ``hits`` — including
-    ``state_broadcast``'s exchange-free auto plan.
+    carried on the state) all mirror ``hits``.
     """
     spark = graph.edges.sparkSession
     vertices = graph.vertices.select("id")
@@ -438,10 +421,9 @@ def salsa(
             (F.lit(1.0) / F.col("idg")).alias("wh"),
         )
     )
-    if state_broadcast == "auto":
-        state_broadcast = n <= broadcast_state_rows(spark, row_bytes=24)
-    e_by_src = stationary(ew, "src", rows=m)
-    e_by_dst = stationary(ew, "dst", rows=m)
+    plan = spmv_plan(spark, n, m, row_bytes=24)
+    e_by = {k: stationary(ew, k, rows=m) for k in ("src", "dst")}
+    a_op, h_op = e_by[plan.operand_key("dst")], e_by[plan.operand_key("src")]
     v_st = stationary(vertices, "id", rows=n)
 
     init = truncate_lineage(
@@ -452,10 +434,7 @@ def salsa(
     fixed_iters = tol < 0
 
     def step(state: DataFrame, i: int) -> tuple[DataFrame, float]:
-        hubs = state.select("id", "hub")
-        a_op = e_by_dst if state_broadcast else e_by_src
-        if state_broadcast:
-            hubs = F.broadcast(hubs)
+        hubs = plan.state(state.select("id", "hub"))
         a_raw = (
             hubs.join(a_op, hubs.id == a_op.src)
             .select(F.col("dst").alias("id"), (F.col("hub") * F.col("wa")).alias("c"))
@@ -471,8 +450,7 @@ def salsa(
                 (F.coalesce("a_raw", F.lit(0.0)) / F.col("asum")).alias("authority"),
             )
         )
-        h_op = e_by_src if state_broadcast else e_by_dst
-        auth_in = F.broadcast(auth) if state_broadcast else auth
+        auth_in = plan.state(auth)
         h_raw = (
             auth_in.join(h_op, auth_in.id == h_op.dst)
             .select(
@@ -514,8 +492,8 @@ def salsa(
         on_exhaustion="ok" if fixed_iters else on_exhaustion,
     )
     res.state = res.state.select("id", "hub", "authority")
-    e_by_src.unpersist()
-    e_by_dst.unpersist()
+    for op in e_by.values():
+        op.unpersist()
     v_st.unpersist()
     return res
 

@@ -1,4 +1,3 @@
 from linkgraph.plans.iterate import IterationStats, iterate
-from linkgraph.plans.skew import salt_edges, split_by_hubs
 
-__all__ = ["IterationStats", "iterate", "salt_edges", "split_by_hubs"]
+__all__ = ["IterationStats", "iterate"]

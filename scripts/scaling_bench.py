@@ -42,8 +42,9 @@ Round 3 adds two further evidence sets:
    block transfer — a genuine 2→8 *executor* (N→4N) step, the closest
    sandbox analogue of adding machines. (The memory pool also grows
    4×, exactly as a real N→4N step would.)
-4. **Broadcast-SpMV ablation** — `pagerank(rank_broadcast=True)` vs
-   the default shuffle plan on a web-shaped V≪E input (4M vertices,
+4. **Broadcast-SpMV ablation** — PageRank's broadcast plan vs its
+   shuffle plan, each picked through
+   `spark.sql.autoBroadcastJoinThreshold`, on a web-shaped V≪E input (4M vertices,
    160M Zipf(1.1) edges): the per-iteration ranks⋈edges join,
    contribution sum and rank update run exchange-free. Shuffle bytes
    are read from the Spark status REST API per run.
@@ -119,7 +120,6 @@ WORKER_PR = r"""
 import json, os, sys, time
 sys.path.insert(0, %(repo)r)
 cores = int(sys.argv[1])
-salt = int(sys.argv[2]) if len(sys.argv) > 2 else 0
 os.environ["SPARK_GRAFT_CPUS"] = str(cores)
 os.environ.setdefault("LINKGRAPH_DRIVER_MEM", "64g")
 from linkgraph import LinkGraph, get_spark
@@ -132,13 +132,12 @@ spark = get_spark("scaling-%%d" %% cores, cores=cores, shuffle_partitions=64)
 g = LinkGraph(spark.read.parquet(%(edges)r), directed=True)
 g.edges.persist()
 n_edges = g.edges.count()
-res = pagerank(g, tol=-1.0, max_iter=%(warmup)d + %(iters)d, truncate_every=1,
-               salt_contribs=salt)
+res = pagerank(g, tol=-1.0, max_iter=%(warmup)d + %(iters)d, truncate_every=1)
 res.state.count()
 steady = [s.seconds for s in res.stats][%(warmup)d:]
 wall = sum(steady)
 print(json.dumps({"cores": cores, "edges": n_edges, "iters": len(steady),
-                  "warmup_iters": %(warmup)d, "salt": salt,
+                  "warmup_iters": %(warmup)d,
                   "per_iter_sec": [round(s, 2) for s in steady],
                   "wall_sec": round(wall, 3),
                   "edges_per_sec": round(len(steady) * n_edges / wall, 1)}))
@@ -147,14 +146,16 @@ spark.stop()
 
 # Generalized PageRank worker: argv = master_spec edges_path plan.
 # master_spec may be local[K] or local-cluster[N,C,M]; plan is
-# "shuffle" (default dst-shuffled contributions) or "broadcast"
-# (rank_broadcast=True: exchange-free iterations). Shuffle bytes for
+# "shuffle" (dst-shuffled contributions; broadcast threshold -1) or
+# "broadcast" (exchange-free iterations; the session's 64 MB threshold
+# covers the 4M x 16 B web rank frame). Shuffle bytes for
 # the whole run are read from the status REST API (UI enabled on a
 # fixed port; completed stages' write side).
 WORKER_PR2 = r"""
 import json, os, sys, time, urllib.request
 sys.path.insert(0, %(repo)r)
 master, edges_path, plan = sys.argv[1], sys.argv[2], sys.argv[3]
+threshold = {"shuffle": "-1", "broadcast": "64MB"}[plan]
 os.environ.setdefault("LINKGRAPH_DRIVER_MEM", "16g")
 from linkgraph import LinkGraph, get_spark
 from linkgraph.operators.pagerank import pagerank
@@ -164,7 +165,8 @@ from linkgraph.operators.pagerank import pagerank
 spark = get_spark("scaling-pr2", master=master, shuffle_partitions=64,
                   extra_conf={"spark.ui.enabled": "true",
                               "spark.ui.port": "4049",
-                              "spark.executor.memory": "11g"})
+                              "spark.executor.memory": "11g",
+                              "spark.sql.autoBroadcastJoinThreshold": threshold})
 
 def shuffle_gb():
     try:
@@ -180,8 +182,7 @@ def shuffle_gb():
 g = LinkGraph(spark.read.parquet(edges_path), directed=True)
 g.edges.persist()
 n_edges = g.edges.count()
-res = pagerank(g, tol=-1.0, max_iter=%(warmup)d + %(iters)d, truncate_every=1,
-               rank_broadcast=(plan == "broadcast"), rank_broadcast_max=200_000_000)
+res = pagerank(g, tol=-1.0, max_iter=%(warmup)d + %(iters)d, truncate_every=1)
 res.state.count()
 gb = shuffle_gb()
 steady = [s.seconds for s in res.stats][%(warmup)d:]
@@ -298,16 +299,6 @@ def main() -> None:
     web_shuf_hi = pr2("web_shuffle_8x4", CLUSTER_HI, WEB_EDGES, "shuffle")
     web_bcast_lo = pr2("web_broadcast_2x4", CLUSTER_LO, WEB_EDGES, "broadcast")
     web_bcast_hi = pr2("web_broadcast_8x4", CLUSTER_HI, WEB_EDGES, "broadcast")
-    # salting ablation at the widest level: explicit 16-salt two-level
-    # agg vs plain groupBy (map-side combine)
-    salt_cache = os.path.join(SCRATCH, "levels_pr_salt.json")
-    if os.path.exists(salt_cache):
-        with open(salt_cache) as f:
-            pr_salt = json.load(f)
-    else:
-        pr_salt = run_level(WORKER_PR, 32, "16")
-        with open(salt_cache, "w") as f:
-            json.dump(pr_salt, f)
     report = {
         "extraction": {
             "levels": ex,
@@ -318,7 +309,6 @@ def main() -> None:
             "levels": pr,
             "eff_2_to_8": round(eff(pr, "edges_per_sec", 2, 8), 3),
             "eff_8_to_32": round(eff(pr, "edges_per_sec", 8, 32), 3),
-            "salt16_at_32": pr_salt,
         },
         "pagerank_executor_scaling": {
             "levels": [cl_lo, cl_hi],
@@ -388,20 +378,6 @@ partitions fixed at 64 (~140 MB tasks) at every level.
 
 **Efficiency 2→8: {p28:.3f} · 8→32: {p832:.3f}**
 
-### Hub-skew salting ablation (local[32], same input)
-
-| contribution aggregation | edges/sec |
-|---|---|
-| plain groupBy (map-side combine) | {pr32['edges_per_sec']:,.0f} |
-| explicit 16-salt two-level agg | {pr_salt['edges_per_sec']:,.0f} |
-
-Spark's map-side partial aggregation already bounds the per-reducer
-row count for a SUM at V·P rows regardless of hub in-degree, so the
-explicit salt adds a shuffle stage without reducing reducer input —
-the ablation quantifies that directly on the hub-skewed input. The
-salted path stays wired (`pagerank(salt_contribs=...)`) for plans
-where partial aggregation degrades.
-
 ## Job 3 — process-isolated executor scaling (N→4N, local-cluster)
 
 Same {pr[0]['edges']:,}-edge input and shuffle-plan PageRank as
@@ -422,7 +398,9 @@ shared.
 
 ## Job 4 — broadcast-SpMV plan (the shuffle-bytes lever), V≪E input
 
-`pagerank(rank_broadcast=True)` caches the transition table
+PageRank's broadcast plan (taken while the V × 16 B rank frame fits
+`spark.sql.autoBroadcastJoinThreshold`; the shuffle arm sets it to
+-1) caches the transition table
 hash-partitioned by dst and broadcasts the V-row rank frame into
 each iteration: the ranks⋈edges join, the contribution sum and the
 rank update all run **exchange-free** — per-iteration shuffle bytes
@@ -466,10 +444,10 @@ re-shuffled it every iteration) — and the convergence delta rides the
 rank update as a carried column instead of a second join. Result:
 local[32] throughput rose 26.0M → {pr32['edges_per_sec']/1e6:.1f}M
 edges/sec (+{(pr32['edges_per_sec']/25976747-1)*100:.0f}%) and the
-8→32 efficiency rose 0.364 → {p832:.3f}. The salting ablation above
-closes the remaining software hypothesis: explicit hub salting makes
-the iteration {pr32['edges_per_sec']/pr_salt['edges_per_sec']:.1f}×
-SLOWER, i.e. the shuffle is not reducer-skew-bound.
+8→32 efficiency rose 0.364 → {p832:.3f}. Explicit hub salting
+measured 3.6× SLOWER than this plain aggregation (the round-2 salting
+ablation in BENCH/BASELINE.md; the salted path has since been
+removed), i.e. the shuffle is not reducer-skew-bound.
 
 What remains under the 0.8 bar is thread-scaling saturation: every
 local[K] thread shares ONE memory bus, ONE shuffle disk, ONE driver
@@ -508,8 +486,9 @@ same band as the shuffle plan's ({ew_s:.3f}): with ZERO per-iteration
 exchange the job still stops scaling at the box's memory bandwidth —
 there are no shuffle bytes left for software to remove, and the
 residual ceiling is hardware. (At 10^9+ vertices the per-executor
-rank broadcast itself becomes the cost, which is why `rank_broadcast`
-auto-selects only below 100k vertices and is guarded above.)
+rank broadcast itself becomes the cost, which is why the plan
+broadcasts only while the rank frame fits
+`spark.sql.autoBroadcastJoinThreshold`.)
 
 Methodology note: every Job 3/4 row is best-over-≥2 runs. First-touch
 runs of the multi-GB inputs are page-cache-cold and measured up to 3×

@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -89,6 +90,23 @@ def two_cliques_bridge(spark):
     c1 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
     c2 = [(a, b) for a in range(11, 15) for b in range(a + 1, 15)]
     return graph_from_edges(spark, c1 + c2 + [(4, 11)], directed=False)
+
+
+@contextmanager
+def shuffle_plan(spark):
+    """Force the shuffle SpMV plan: disable broadcast joins through
+    ``spark.sql.autoBroadcastJoinThreshold`` (the setting
+    plans/partitioning.spmv_plan reads) and restore it on exit."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
 
 
 def collect_map(df, k, v):

@@ -498,20 +498,22 @@ def test_sitemap_entries_empty_and_no_matches(spark):
     assert sitemap_entries(df).count() == 0
 
 
-def test_opic_state_broadcast_matches_shuffle(spark):
-    """OPIC's broadcast cash-gather plan equals the shuffle plan
+def test_opic_broadcast_plan_matches_shuffle(spark):
+    """OPIC's broadcast cash-gather plan (the default at this V)
+    equals the shuffle plan forced through the broadcast threshold
     exactly (same rounds, same priorities)."""
     import random
 
-    from conftest import collect_map, graph_from_edges
+    from conftest import collect_map, graph_from_edges, shuffle_plan
     from linkgraph.operators.crawl import opic
 
     rng = random.Random(23)
     edges = list({(rng.randrange(40), rng.randrange(40)) for _ in range(120)})
     edges = [(a, b) for a, b in edges if a != b]
     g = graph_from_edges(spark, edges, directed=True)
-    a = collect_map(opic(g, rounds=4, state_broadcast=False), "id", "priority")
-    b = collect_map(opic(g, rounds=4, state_broadcast=True), "id", "priority")
+    with shuffle_plan(spark):
+        a = collect_map(opic(g, rounds=4), "id", "priority")
+    b = collect_map(opic(g, rounds=4), "id", "priority")
     assert set(a) == set(b)
     for k in a:
         assert abs(a[k] - b[k]) < 1e-12

@@ -103,16 +103,22 @@ def test_replica_exact_no_negatives(spark):
 
 
 def test_shuffle_model_path_matches_broadcast(spark):
+    """The broadcast model plan (the default at this vocabulary) and
+    the shuffle plan forced through the broadcast threshold train
+    the same vectors."""
+    from conftest import shuffle_plan
+
     df = spark.createDataFrame(PAIRS, "c long, o long")
     kw = dict(dim=3, iters=2, lr=0.8, k_neg=1, seed=5)
     b = {
         r["id"]: np.array(r["vec"])
-        for r in skipgram_train(df, model_broadcast=True, **kw).collect()
+        for r in skipgram_train(df, **kw).collect()
     }
-    s = {
-        r["id"]: np.array(r["vec"])
-        for r in skipgram_train(df, model_broadcast=False, **kw).collect()
-    }
+    with shuffle_plan(spark):
+        s = {
+            r["id"]: np.array(r["vec"])
+            for r in skipgram_train(df, **kw).collect()
+        }
     for i in b:
         assert np.allclose(b[i], s[i], atol=1e-9), i
 

@@ -54,3 +54,43 @@ def test_warm_start_rejects_degenerate_vector(spark):
     # all-zero init normalizes to nothing — loud, not a silent decay
     with pytest.raises(Exception):
         pagerank(g, tol=1e-6, init_ranks=zeros)
+
+
+def _plan_len(df):
+    return len(df._jdf.queryExecution().analyzed().toString())
+
+
+def test_warm_start_chain_plan_stays_bounded(spark):
+    """Each warm start from the fixpoint converges before the first
+    truncate boundary; cutting the seed keeps the result's plan from
+    nesting every earlier result's plan (chained deltas used to grow
+    until the driver ran out of heap)."""
+    G = nx.gnp_random_graph(40, 0.1, seed=5, directed=True)
+    g = graph_from_edges(spark, list(G.edges()))
+    cold = pagerank(g, tol=1e-9)
+    res, lens = cold, []
+    for _ in range(5):
+        res = pagerank(g, tol=1e-9, init_ranks=res.state)
+        lens.append(_plan_len(res.state))
+        # fail at the first growth: an uncut chain grows its plan
+        # multiplicatively and exhausts the driver heap by the 5th
+        assert len(lens) < 3 or lens[-1] <= lens[1], lens
+    rc, rw = _ranks(cold), _ranks(res)
+    assert set(rc) == set(rw)
+    for v in rc:
+        assert rw[v] == pytest.approx(rc[v], abs=1e-6)
+
+
+def test_wcc_warm_start_chain_plan_stays_bounded(spark):
+    from linkgraph.operators.components import weakly_connected_components
+
+    G = nx.gnp_random_graph(40, 0.05, seed=7, directed=True)
+    g = graph_from_edges(spark, list(G.edges()), vertices=range(40))
+    cold = weakly_connected_components(g)
+    res, lens = cold, []
+    for _ in range(5):
+        res = weakly_connected_components(g, init_labels=res.state)
+        lens.append(_plan_len(res.state))
+        assert len(lens) < 3 or lens[-1] <= lens[1], lens
+    labels = lambda r: {x.id: x.component for x in r.state.collect()}  # noqa: E731
+    assert labels(res) == labels(cold)

@@ -109,83 +109,20 @@ def test_pagerank_personalized_partial(spark, diamond_weighted):
         assert abs(got[k] - want[k]) < 1e-8
 
 
-def test_salted_aggregation_matches_plain(spark, two_cliques_bridge):
-    """Exactness of the two-level salted contribution sum: identical
-    ranks to the plain groupBy path."""
-    import numpy as np
-
-    from conftest import collect_map
-
-    a = collect_map(pagerank(two_cliques_bridge, tol=1e-10).state, "id", "rank")
-    b = collect_map(
-        pagerank(two_cliques_bridge, tol=1e-10, salt_contribs=16).state, "id", "rank"
-    )
-    assert a.keys() == b.keys()
-    av = np.array([a[k] for k in sorted(a)])
-    bv = np.array([b[k] for k in sorted(b)])
-    assert np.allclose(av, bv, atol=1e-9)
-
-
-def test_salted_aggregation_deterministic_across_runs(spark, two_cliques_bridge):
-    """The salt is content-derived (not monotonically_increasing_id),
-    so the two-level float summation order — and therefore every
-    last-ulp rank value — is identical run-to-run."""
-    a = collect_map(
-        pagerank(two_cliques_bridge, tol=1e-10, salt_contribs=16).state, "id", "rank"
-    )
-    b = collect_map(
-        pagerank(two_cliques_bridge, tol=1e-10, salt_contribs=16).state, "id", "rank"
-    )
-    assert a == b  # bit-identical, not allclose
-
-
-def test_salted_sum_unit_deterministic(spark):
-    """salted_sum on a hub-skewed frame: equals the plain groupBy sum
-    exactly in value set, and repeated invocations are bit-identical."""
-    from pyspark.sql import functions as F
-
-    from linkgraph.plans.skew import salted_sum
-
-    df = spark.range(10_000).select(
-        (F.col("id") % 7 == 0).cast("long").alias("k"),  # hub key 1: ~1400 rows
-        (F.rand(seed=7) + F.lit(0.1)).alias("v"),
-    )
-    plain = {r["k"]: r["s"] for r in df.groupBy("k").agg(F.sum("v").alias("s")).collect()}
-    s1 = {r["k"]: r["s"] for r in salted_sum(df, "k", "v", "s", n_salts=16).collect()}
-    s2 = {r["k"]: r["s"] for r in salted_sum(df, "k", "v", "s", n_salts=16).collect()}
-    assert s1 == s2
-    for k in plain:
-        assert abs(s1[k] - plain[k]) < 1e-9 * max(1.0, abs(plain[k]))
-
-
-def test_rank_broadcast_matches_shuffle_plan(spark, two_cliques_bridge, star_hub):
-    """The V≪E broadcast-SpMV plan (zero per-iteration shuffle) is
-    value-identical to the default shuffle plan, dangling mass and
+def test_broadcast_plan_matches_shuffle_plan(spark, two_cliques_bridge, star_hub):
+    """The V≪E broadcast-SpMV plan (zero per-iteration shuffle, the
+    default at this V) is value-identical to the shuffle plan forced
+    through spark.sql.autoBroadcastJoinThreshold=-1, dangling mass and
     all."""
-    import numpy as np
-
-    from conftest import collect_map
+    from conftest import shuffle_plan
 
     for g in (two_cliques_bridge, star_hub):
-        a = collect_map(
-            pagerank(g, tol=1e-10, rank_broadcast=False).state, "id", "rank"
-        )
-        b = collect_map(pagerank(g, tol=1e-10, rank_broadcast=True).state, "id", "rank")
-        # default "auto" picks broadcast at this V; must equal both
-        c = collect_map(pagerank(g, tol=1e-10).state, "id", "rank")
-        assert a.keys() == b.keys() == c.keys()
+        b = collect_map(pagerank(g, tol=1e-10).state, "id", "rank")
+        with shuffle_plan(spark):
+            a = collect_map(pagerank(g, tol=1e-10).state, "id", "rank")
+        assert a.keys() == b.keys()
         ks = sorted(a)
         assert np.allclose([a[k] for k in ks], [b[k] for k in ks], atol=1e-12)
-        assert np.allclose([a[k] for k in ks], [c[k] for k in ks], atol=1e-12)
-
-
-def test_rank_broadcast_guard(two_cliques_bridge):
-    """Broadcasting a vertex frame beyond the guard raises loudly
-    instead of collecting 10^10 rows to the driver."""
-    import pytest
-
-    with pytest.raises(ValueError, match="rank_broadcast"):
-        pagerank(two_cliques_bridge, rank_broadcast=True, rank_broadcast_max=3)
 
 
 def test_trustrank_equals_seed_personalized_pagerank(spark, star_hub):

@@ -257,13 +257,14 @@ def test_salsa_converged_vs_replica(spark):
         assert abs(got[v][1] - a[v]) < 1e-7
 
 
-def test_state_broadcast_plans_match_shuffle(spark):
-    """The exchange-free broadcast plans reach the same fixpoints as
-    the shuffle plans for HITS, SALSA, Katz and eigenvector (same
+def test_broadcast_plans_match_shuffle(spark):
+    """The exchange-free broadcast plans (the default at this V) reach
+    the same fixpoints as the shuffle plans forced through the
+    broadcast threshold for HITS, SALSA, Katz and eigenvector (same
     contract as pagerank's broadcast==shuffle parity test)."""
     import random
 
-    from conftest import collect_map, graph_from_edges
+    from conftest import collect_map, graph_from_edges, shuffle_plan
     from linkgraph.operators.spectral import (
         eigenvector_centrality,
         hits,
@@ -282,8 +283,9 @@ def test_state_broadcast_plans_match_shuffle(spark):
         (katz_centrality, "centrality"),
         (eigenvector_centrality, "centrality"),
     ):
-        a = collect_map(fn(g, state_broadcast=False).state, "id", col)
-        b = collect_map(fn(g, state_broadcast=True).state, "id", col)
+        with shuffle_plan(spark):
+            a = collect_map(fn(g).state, "id", col)
+        b = collect_map(fn(g).state, "id", col)
         assert set(a) == set(b)
         for k in a:
             assert abs(a[k] - b[k]) < 1e-9, (fn.__name__, k)
